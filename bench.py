@@ -83,7 +83,7 @@ def _run_queries(spark, names, sf_dir, runs: int = 2, rerun_below: float = 5.0):
     from downloader_spark.operators.dedup import release_result
     from downloader_spark.queries import Q
 
-    def once(name: str) -> float:
+    def once(name: str) -> tuple[float, list[int]]:
         t0 = time.monotonic()
         df = Q[name](spark, sf_dir)
         # force evaluation of EVERY output column — count() lets Catalyst
@@ -98,17 +98,17 @@ def _run_queries(spark, names, sf_dir, runs: int = 2, rerun_below: float = 5.0):
         dt = time.monotonic() - t0
         assert out[0]["n"] >= 0
         release_result(df)
-        return dt
+        return dt, [int(out[0]["n"]), int(out[0]["h"] or 0)]
 
-    times = {}
+    times, hashes = {}, {}
     for name in names:
-        best = once(name)
+        best, hashes[name] = once(name)
         for _ in range(runs - 1):
             if best >= rerun_below:
                 break
-            best = min(best, once(name))
+            best = min(best, once(name)[0])
         times[name] = round(best, 4)
-    return times
+    return times, hashes
 
 
 def _extract_throughput(spark, sf_dir, repeat: int = 1):
@@ -553,7 +553,7 @@ def main() -> None:
 
     spark = _session(CPUS)
     t_all0 = time.monotonic()
-    qtimes = _run_queries(spark, HEADLINE, SF_DIR)
+    qtimes, qhashes = _run_queries(spark, HEADLINE, SF_DIR)
     suite_wall = round(time.monotonic() - t_all0, 4)
     # headline value = Σ per-query best-of-2 — comparable round-to-round
     # (raw suite wall includes the second timing passes; kept alongside)
@@ -569,6 +569,9 @@ def main() -> None:
         "query_timing": "best_of_2_per_query",
         "suite_wall_sec": suite_wall,
         "queries": qtimes,
+        # (rows, bit_xor(xxhash64(*))) of each query's first run: equal
+        # across two trees means equal outputs
+        "query_hashes": qhashes,
         "sf": SF_DIR,
         "cpus": CPUS,
         "pages_converted_per_sec": pages_per_sec,

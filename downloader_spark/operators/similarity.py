@@ -1,14 +1,19 @@
 """Similarity search over embedding columns (array<float>).
 
 - ``cosine_topk``: brute-force exact top-k — the correctness baseline.
-  Dot products computed NATIVELY (zip_with + aggregate higher-order
-  functions, JVM-side); the queries side is broadcast so the scan of
-  the candidate table is the only big input (no shuffle of candidates).
+  The query batch is collected once and shipped in the kernel closure;
+  ONE mapInPandas pass over the candidate table scores it (the top-k
+  kernel below), so the candidate scan is the only big input.
 - ``lsh_topk``: the scale path — random-hyperplane LSH buckets
-  candidates; only same-bucket (or neighboring-band) pairs are scored.
-  At 100 TB the bucket join replaces the broadcast nested loop: shuffle
-  on the bucket key, score within buckets.
+  candidates; only same-bucket pairs are scored.
+- ``embedding_near_dups``: threshold pairs, scored per group (LSH
+  bucket, or the whole input for the exact path) by the pair kernel
+  below — no pair join.
+- IVF / two-level IVF indexes (float, SQ8 or PQ list payloads): probes
+  score only their probed lists through the same top-k kernel.
 
+Every cosine here and in operators/semdedup.py comes from the two
+Arrow kernels in this module (see the kernel comment block).
 Hyperplanes are derived deterministically from xxhash64(vec_id-free
 seeds) so results are reproducible without RNG state.
 """
@@ -18,24 +23,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a):
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
 
 
 def cosine_topk(
@@ -103,35 +90,45 @@ MAX_EXACT_ROWS = 50_000
 
 
 # ---------------------------------------------------------------------------
-# Arrow scoring kernel (r7 optimization round).
-#
-# Every top-k query path (brute force, IVF probe, tree probe, LSH)
-# used to materialize the full (candidate × query) pair table and
-# score it with higher-order-function fold expressions — at sf1.0
-# that is 4M+ rows each dragging two 64-float arrays through the plan
-# and a 4M-row window shuffle (guide §2.3/§4.2: the pairs exist only
-# to be ranked; the payload bytes and the per-element HOF interpreter
-# work dominate). The kernel replaces that with ONE mapInPandas pass
-# over the candidate table: each Arrow batch scores all queries at
-# once in numpy and emits only a per-batch top-k SUPERSET, so the
-# shuffle/window runs on ~batches × queries × k rows instead of
-# candidates × queries.
+# Arrow cosine kernels — the ONE cosine implementation of this module and
+# of operators/semdedup.py. A pair table exists only to be ranked or
+# thresholded, and dragging two 64-float arrays per pair through joins
+# and a window shuffle dominates its cost (guide §2.3/§4.2), so no pair
+# table is built:
+# - _kernel_topk_superset: ONE mapInPandas pass over the candidate
+#   table; each Arrow batch scores all queries at once and emits only a
+#   per-batch top-k SUPERSET, so the rank window runs on
+#   ~batches × queries × k rows (cosine_topk, lsh_topk, every IVF probe
+#   including the quantized approximate pass and its rerank).
+# - _kernel_threshold_pairs: rows grouped by any key (LSH bucket,
+#   semdedup cluster, or one group for the exact path) and split into
+#   block pairs for parallelism; each task emits only the pairs that
+#   may pass the threshold (embedding_near_dups, semantic_dedup).
 #
 # Exactness contract (the oracle hashes pin every output bit):
-# - dot/norm are computed as the SAME IEEE-754 double sequence as the
-#   F.aggregate folds they replace: a Python loop over dimensions doing
-#   elementwise acc = acc + (c_d * q_d) — numpy elementwise ops are
-#   single correctly-rounded IEEE ops, so the result is bit-identical
-#   to the JVM's left-to-right fold (never np.dot/@, whose blocked
-#   summation reassociates).
-# - per-batch selection keeps every candidate within MARGIN = 2.5e-6
-#   (2.5 rounding quanta) of the batch's k-th best raw score. The
-#   final ranking is by (round(sim, 6) DESC, cand_id): if a candidate
-#   x is in the batch top-k under THAT order, any y ranked above x has
-#   round(y) >= round(x), hence raw y > raw x - 1.5 quanta, so x is
-#   never cut by the raw-score margin — the union of batch supersets
-#   contains the global top-k, and the unchanged F.round +
-#   per_key_topk tail reproduces the old output exactly.
+# - dot products and norms are ONE left-to-right IEEE-754 double fold
+#   (_fold_dot): a Python loop over dimensions doing elementwise
+#   acc = acc + a_d * b_d, the order a Spark F.aggregate(zip_with(...))
+#   fold evaluates. numpy elementwise ops are single correctly-rounded
+#   IEEE ops (never np.dot/@, whose blocked summation reassociates).
+# - a cosine that is not finite (a zero-norm vector gives 0/0 = NaN)
+#   makes its candidate or pair INADMISSIBLE: never emitted, never
+#   ranked, never the k-th value of a batch's selection — so a batch
+#   full of zero vectors cannot push out its finite candidates.
+# - top-k: per-batch selection keeps every candidate within
+#   MARGIN = 2.5e-6 (2.5 rounding quanta) of the batch's k-th best raw
+#   score. The final ranking is by (round(sim, 6) DESC, cand_id): if a
+#   candidate x is in the batch top-k under THAT order, any y ranked
+#   above x has round(y) >= round(x), hence raw y > raw x - 1.5 quanta,
+#   so x is never cut by the raw-score margin — the union of batch
+#   supersets contains the global top-k (and the raw-order top-k), and
+#   the F.round + per_key_topk tail (_topk_tail) decides exactly.
+# - threshold: the kernel emits the RAW cosine of every pair at or
+#   above cut - 1e-9, cut = threshold - 0.5 quantum. round(x) >=
+#   threshold implies x >= cut up to the decimal-to-double error of
+#   the cut (far below 1e-9), so the emitted set is a superset and the
+#   caller's F.round(cosine, round_to) >= threshold filter decides —
+#   Spark's own rounding, no Python mirror of it.
 # ---------------------------------------------------------------------------
 
 
@@ -151,31 +148,42 @@ def _collect_query_matrix(queries: DataFrame, vec_col: str):
     return qids, Q
 
 
+def _fold_dot(A, B):
+    """sum_d A[..., d] * B[..., d] as one left-to-right IEEE fold (one
+    multiply, one add per dimension) — the dot product of every kernel.
+    The leading axes broadcast: (n, 1, dim) x (1, m, dim) gives the
+    n x m pair matrix, (n, dim) x (n, dim) the row-wise dots."""
+    import numpy as np
+
+    acc = np.zeros(
+        np.broadcast_shapes(A.shape[:-1], B.shape[:-1]), dtype=np.float64
+    )
+    for d in range(A.shape[-1]):
+        acc = acc + A[..., d] * B[..., d]
+    return acc
+
+
 def _fold_norms(M):
-    """sqrt of the left-to-right fold of squares per row — bit-equal to
-    _norm()'s aggregate expression."""
+    """Row norms: sqrt of each row's _fold_dot with itself."""
     import numpy as np
 
-    acc = np.zeros(M.shape[0], dtype=np.float64)
-    for d in range(M.shape[1]):
-        c = M[:, d]
-        acc = acc + c * c
-    return np.sqrt(acc)
+    return np.sqrt(_fold_dot(M, M))
 
 
-def _fold_dot_and_norm(C, Q):
-    """(dots n×m, candidate norms n) with the exact fold order of
-    _dot()/_norm(): per dimension, one IEEE multiply then one IEEE add."""
+def _cosine(dots, norms):
+    """dots / norms without numpy's divide warnings: a zero norm yields
+    a non-finite cosine, which every caller treats as inadmissible."""
     import numpy as np
 
-    n = C.shape[0]
-    dots = np.zeros((n, Q.shape[0]), dtype=np.float64)
-    cn = np.zeros(n, dtype=np.float64)
-    for d in range(C.shape[1]):
-        c = C[:, d]
-        cn = cn + c * c
-        dots = dots + c[:, None] * Q[:, d][None, :]
-    return dots, np.sqrt(cn)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return dots / norms
+
+
+def _stack(vectors):
+    """float64 row matrix of an Arrow batch's array column."""
+    import numpy as np
+
+    return np.stack([np.asarray(v, dtype=np.float64) for v in vectors])
 
 
 def _kernel_topk_superset(
@@ -191,17 +199,19 @@ def _kernel_topk_superset(
 ) -> DataFrame:
     """(query_id, cand_id, cosine<raw double>) containing, per Arrow
     batch of the candidate scan, a superset of that batch's top-k by
-    (round(cosine, round_to) DESC, cand_id ASC) — see the module
-    comment above for the margin proof. ``mask_fn(pdf, cid, nq)``
-    returns a (len(pdf) × nq) bool matrix of admissible pairs (probe
-    membership, LSH bucket match); cand_id == query_id is always
-    excluded. Raw doubles are returned so the caller's unchanged
-    F.round + per_key_topk tail sees the same values as the HOF path."""
+    (round(cosine, round_to) DESC, cand_id ASC) — see the kernel
+    comment block above for the margin proof. ``mask_fn(pdf, C)`` gets
+    the batch rows and their float64 matrix (stacked once, here) and
+    returns a (len(pdf) × n_queries) bool matrix of admissible pairs
+    (probe membership, LSH bucket match, rerank survivors);
+    cand_id == query_id and a non-finite cosine are always
+    inadmissible. Raw doubles are returned: the caller's _topk_tail
+    rounds and ranks."""
     import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     # q_collected: (qids, Q) when the caller already collected the query
-    # batch (probe-list derivation) — mask row order must match Q's
+    # batch (probe-list derivation) — mask column order must match Q's
     qids, Q = (
         q_collected if q_collected is not None
         else _collect_query_matrix(queries, vec_col)
@@ -225,15 +235,15 @@ def _kernel_topk_superset(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            C = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["cvec"]]
-            )
+            C = _stack(pdf["cvec"])
             cid = pdf["cand_id"].to_numpy()
-            dots, cn = _fold_dot_and_norm(C, Q)
-            sims = dots / (cn[:, None] * qn[None, :])
-            valid = cid[:, None] != qid_arr[None, :]
+            sims = _cosine(
+                _fold_dot(C[:, None, :], Q[None, :, :]),
+                _fold_norms(C)[:, None] * qn[None, :],
+            )
+            valid = np.isfinite(sims) & (cid[:, None] != qid_arr[None, :])
             if mask_fn is not None:
-                valid &= mask_fn(pdf, cid, nq)
+                valid &= mask_fn(pdf, C)
             neg = np.where(valid, sims, -np.inf)
             out_q, out_c, out_s = [], [], []
             n = len(cid)
@@ -267,8 +277,8 @@ def _kernel_topk_superset(
 
 
 def _topk_tail(superset: DataFrame, k: int, round_to: int) -> DataFrame:
-    """F.round + per-query window rank — byte-identical to the tail the
-    HOF paths used, now over the tiny kernel superset."""
+    """F.round + per-query window rank over the kernel superset — the
+    final (round(cosine) DESC, cand_id ASC) decision."""
     from .topk import per_key_topk
 
     scored = superset.select(
@@ -277,6 +287,108 @@ def _topk_tail(superset: DataFrame, k: int, round_to: int) -> DataFrame:
     return per_key_topk(
         scored, ["query_id"], [F.desc("cosine"), F.asc("cand_id")], k=k
     ).select("query_id", "cand_id", "cosine", "rnk")
+
+
+def _kernel_threshold_pairs(
+    rows: DataFrame,
+    group_cols: list[str],
+    threshold: float,
+    round_to: int,
+    n_groups: int,
+    block: int = 2048,
+) -> DataFrame:
+    """(id_a, id_b, cosine<raw double>), id_a < id_b, for the pairs of
+    ``rows`` (group_cols..., _id, _v) that share a group key and whose
+    raw cosine is finite and >= cut - 1e-9 — a superset of the pairs
+    with round(cosine, round_to) >= threshold (kernel comment block
+    above); the caller's F.round filter decides.
+
+    Parallelism: each group's rows are hash-assigned to nb blocks and
+    replicated to every (block, block) task they take part in —
+    n_groups·nb(nb+1)/2 tasks, the same pair set and per-pair
+    arithmetic as one task per group. nb is derived from the session
+    parallelism and ``n_groups`` (an upper bound on the group count);
+    nb = 1 is one task per group."""
+    import numpy as np
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    floor = threshold - 0.5 * 10.0 ** (-round_to) - 1e-9
+
+    def pairs_fn(pdf: pd.DataFrame, ta: int, tb: int) -> pd.DataFrame:
+        """One (group, block-pair) task: within a block (ta == tb) the
+        rows are id-sorted and only upper-triangle tiles are scored
+        (pairs id_a < id_b); across blocks every A×B pair is scored
+        once. Output ids are (min, max); an empty result keeps the id
+        column's dtype."""
+        ids = pdf["_id"].to_numpy()
+        out = [(ids[:0], ids[:0], np.zeros(0))]
+        if len(pdf) >= 2:
+            blk = pdf["_blk"].to_numpy()
+            V = _stack(pdf["_v"])
+            ia, Va = ids[blk == ta], V[blk == ta]
+            same = ta == tb
+            if same:
+                order = np.argsort(ia, kind="stable")
+                ia, Va = ia[order], Va[order]
+                ib, Vb = ia, Va
+            else:
+                ib, Vb = ids[blk == tb], V[blk == tb]
+            na = _fold_norms(Va)
+            nb_ = na if same else _fold_norms(Vb)
+            for i0 in range(0, len(ia), block):
+                for j0 in range(i0 if same else 0, len(ib), block):
+                    sa, sb = slice(i0, i0 + block), slice(j0, j0 + block)
+                    a, b = ia[sa][:, None], ib[sb][None, :]
+                    sims = _cosine(
+                        _fold_dot(Va[sa][:, None, :], Vb[sb][None, :, :]),
+                        na[sa][:, None] * nb_[sb][None, :],
+                    )
+                    ii, jj = np.nonzero(
+                        (a < b if same else a != b)
+                        & np.isfinite(sims)
+                        & (sims >= floor)
+                    )
+                    x, y = ia[sa][ii], ib[sb][jj]
+                    lo = x < y
+                    out.append(
+                        (np.where(lo, x, y), np.where(lo, y, x), sims[ii, jj])
+                    )
+        id_a, id_b, cos = (np.concatenate(c) for c in zip(*out))
+        return pd.DataFrame({"id_a": id_a, "id_b": id_b, "cosine": cos})
+
+    spark = rows.sparkSession
+    par = spark.sparkContext.defaultParallelism
+    nb = 1
+    while n_groups * nb * (nb + 1) // 2 < par and nb < 8:
+        nb += 1
+    keep = [*group_cols, "_id", "_v"]
+    tasks = rows.select(
+        *keep,
+        F.pmod(F.xxhash64(F.col("_id").cast("string")), F.lit(nb))
+        .cast("int").alias("_blk"),
+    ).select(
+        *keep, "_blk",
+        F.explode(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(nb - 1)),
+                lambda x: F.struct(
+                    F.least(F.col("_blk"), x.cast("int")).alias("ta"),
+                    F.greatest(F.col("_blk"), x.cast("int")).alias("tb"),
+                ),
+            )
+        ).alias("_t"),
+    ).select(*keep, "_blk", "_t.ta", "_t.tb")
+    id_type = rows.schema["_id"].dataType
+    schema = StructType(
+        [
+            StructField("id_a", id_type),
+            StructField("id_b", id_type),
+            StructField("cosine", DoubleType()),
+        ]
+    )
+    return tasks.groupBy(*group_cols, "ta", "tb").applyInPandas(
+        lambda key, pdf: pairs_fn(pdf, int(key[-2]), int(key[-1])), schema
+    )
 
 
 def embedding_near_dups(
@@ -292,17 +404,21 @@ def embedding_near_dups(
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine ≥ threshold.
 
-    Candidate generation:
-    - LSH (the DEFAULT): hyperplane-signature bucket join — the scale
-      path; pairs in different buckets are missed (recall<1), standard
-      for embedding dedup at 100 TB. ``dim`` is probed from the first
-      row when not given; ``n_tables`` > 1 OR-amplifies recall with L
-      independent tables (still one shuffle, keyed (table, signature)).
-    - exact (``exact=True``, opt-in): O(n²) theta self-join
-      (BroadcastNestedLoopJoin). This is the oracle/verify baseline
-      ONLY — it refuses inputs above MAX_EXACT_ROWS so the natural
-      entry point can never silently run a cartesian product at scale.
-    Returns (id_a, id_b, cosine) with id_a < id_b.
+    Candidate generation — both score in _kernel_threshold_pairs, with
+    no pair join and no vector re-attach:
+    - LSH (the DEFAULT): rows are grouped by hyperplane-signature
+      bucket — the scale path; pairs in different buckets are missed
+      (recall<1), standard for embedding dedup at 100 TB. ``dim`` is
+      probed from the first row when not given; ``n_tables`` > 1
+      OR-amplifies recall with L independent tables (still one
+      shuffle, keyed (table, signature); a pair found by several
+      tables is deduplicated on the id-pair output).
+    - exact (``exact=True``, opt-in): the whole input is ONE group, so
+      every pair is scored. This is the oracle/verify baseline ONLY —
+      O(n²) work — it refuses inputs above MAX_EXACT_ROWS so the
+      natural entry point can never silently score all pairs at scale.
+    A pair whose cosine is not finite (a zero-norm vector) is never
+    emitted. Returns (id_a, id_b, cosine) with id_a < id_b.
     """
     base = embeddings.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
     if exact:
@@ -312,13 +428,7 @@ def embedding_near_dups(
                 f"exact=True is the O(n²) verify baseline; input has {n} rows "
                 f"(> {MAX_EXACT_ROWS}). Use the default LSH path at scale."
             )
-        l, r = base.alias("l"), base.alias("r")
-        paired = l.join(r, on=[F.col("l._id") < F.col("r._id")]).select(
-            F.col("l._id").alias("id_a"),
-            F.col("r._id").alias("id_b"),
-            F.col("l._v").alias("_va"),
-            F.col("r._v").alias("_vb"),
-        )
+        rows, group_cols, n_groups = base, [], 1
     else:
         if dim is None:
             first = base.select(F.size("_v").alias("d")).first()
@@ -326,30 +436,17 @@ def embedding_near_dups(
                 dim = 1  # empty input: any plane width yields zero pairs
             else:
                 dim = int(first["d"])
-        # vectors never enter the bucket self-join (minhash rule): the
-        # L-table explode carries bare (_id, tbl, sig); pairs dedupe as
-        # ids only, then the two vectors re-attach by id
-        sigs = _exploded_sigs(base, ["_id"], F.col("_v"), dim, n_planes, n_tables)
-        l, r = sigs.alias("l"), sigs.alias("r")
-        pairs = l.join(
-            r,
-            on=[
-                F.col("l._tbl") == F.col("r._tbl"),
-                F.col("l._sig") == F.col("r._sig"),
-                F.col("l._id") < F.col("r._id"),
-            ],
-        ).select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
-        if n_tables > 1:
-            pairs = pairs.dropDuplicates(["id_a", "id_b"])
-        paired = pairs.join(
-            base.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va")), "id_a"
-        ).join(
-            base.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb")), "id_b"
+        rows = _exploded_sigs(
+            base, ["_id", "_v"], F.col("_v"), dim, n_planes, n_tables
         )
-    sim = _dot(F.col("_va"), F.col("_vb")) / (_norm(F.col("_va")) * _norm(F.col("_vb")))
-    return paired.select(
-        "id_a", "id_b", F.round(sim, round_to).alias("cosine")
+        group_cols, n_groups = ["_tbl", "_sig"], n_tables << n_planes
+    pairs = _kernel_threshold_pairs(rows, group_cols, threshold, round_to, n_groups)
+    out = pairs.select(
+        "id_a", "id_b", F.round("cosine", round_to).alias("cosine")
     ).filter(F.col("cosine") >= threshold)
+    if not exact and n_tables > 1:
+        out = out.dropDuplicates(["id_a", "id_b"])
+    return out
 
 
 def make_nearest_centroids_udf(centroids: list[list[float]], n: int = 1):
@@ -539,7 +636,7 @@ def sq8_decode_py(codes, params: dict) -> list[float]:
 # gets its own ks-centroid codebook; a vector stores m ONE-BYTE codes
 # (m bytes total vs dim bytes for SQ8 vs 8·dim for floats — dim/m ×
 # smaller again). Probes score nearest-codeword reconstructions and
-# re-rank survivors at full precision (the same _rank_tail refine step
+# re-rank survivors at full precision (the same _probe_topk refine step
 # as SQ8). The per-subspace codebooks are fitted DISTRIBUTED: one
 # explode into (subspace, subvector) rows, then the same grouped-Lloyd
 # job kmeans_tree uses per coarse cell — all m codebooks train together
@@ -889,157 +986,115 @@ def ivf_probe(
     rerank_factor: int = 4,
 ) -> DataFrame:
     """Probe a built index: each query scores only its nprobe nearest
-    inverted lists. The join key is the list id ``_c`` — against a
-    ``path``-stored index the probe side drives partition pruning, so
-    non-probed lists are never read; with nprobe == n_centroids every
-    list is probed and the result is EXACTLY the brute-force top-k (the
-    DuckDB-oracle-able configuration proving the lists partition the
-    candidate set losslessly).
+    inverted lists. With nprobe == n_centroids every list is probed and
+    the result is EXACTLY the brute-force top-k (the DuckDB-oracle-able
+    configuration proving the lists partition the candidate set
+    losslessly).
 
-    Against a quantized index (``index.sq8``), candidates are scored on
-    the affine SQ8 reconstruction. Pass ``rerank_from`` (the
+    Probe lists are derived driver-side (the same numpy expression as
+    the assignment UDF); scoring is _probe_topk: a stored index is
+    pre-filtered on its ``_c`` PARTITION column (static pruning — only
+    probed lists' files are read), and one top-k kernel pass scores
+    each candidate batch against the queries probing its list.
+
+    Against a quantized index (``index.sq8`` / ``index.pq``) candidates
+    are scored on their reconstruction. Pass ``rerank_from`` (the
     full-precision (id, vec) table — at scale, the base corpus) to
     RE-RANK each query's top k·rerank_factor reconstruction-scored
-    survivors exactly: the survivor set is tiny (n_queries × k·factor)
-    and broadcasts into the id join, so full-precision vectors are
-    touched only for survivors (FAISS SQ8 refine step).
+    survivors exactly: full-precision vectors are read only for
+    survivors (FAISS refine step)."""
+    import numpy as np
 
-    Float (non-quantized) probes run the Arrow scoring kernel (r7):
-    probe lists are derived driver-side with the same numpy expression
-    the probe UDF used, a stored index is pre-filtered natively on the
-    ``_c`` PARTITION column (static pruning — only probed lists' files
-    are read), and each candidate batch scores only the queries probing
-    its list. The list join, the pair table and its window shuffle are
-    gone; the round + rank tail is unchanged."""
-    if not index.quantized:
-        import numpy as np
-
-        qry = queries.select("query_id", F.col(vec_col).alias("qvec"))
-        qids, Q = _collect_query_matrix(qry, "qvec")
-        C = np.asarray(index.centroids, dtype=np.float64)
-        cn = (C * C).sum(axis=1)
-        n_lists = len(index.centroids)
-        n_probe = min(nprobe, n_lists)
-        lists = (
-            np.argsort(
-                cn[None, :] - 2.0 * (Q @ C.T), axis=1, kind="stable"
-            )[:, :n_probe]
-            if len(Q)
-            else np.zeros((0, n_probe), dtype=np.int64)
-        )
-        probe_bool = np.zeros((len(Q), n_lists), dtype=bool)
-        for j, row in enumerate(lists):
-            probe_bool[j, row] = True
-        cand = index.assigned
-        if index.path is not None and n_probe < n_lists:
-            probed = sorted({int(c) for row in lists for c in row})
-            cand = cand.filter(F.col("_c").isin(probed))
-
-        def mask_fn(pdf, cid, nq):
-            return probe_bool[:, pdf["_c"].to_numpy()].T
-
-        superset = _kernel_topk_superset(
-            cand, qry, k, round_to, vec_col="qvec",
-            extra_cols=("_c",), mask_fn=mask_fn, q_collected=(qids, Q),
-        )
-        return _topk_tail(superset, k, round_to)
-
-    probe = make_nearest_centroids_udf(index.centroids, nprobe)
-    qry = queries.select(
-        "query_id", F.col(vec_col).alias("qvec")
-    ).withColumn("_probe", F.explode(probe(F.col("qvec"))))
-    cand = index.assigned
-    if index.sq8 is not None:
-        cand = cand.withColumn(
-            "cvec", sq8_decode_col(F.col("ccode"), index.sq8)
-        ).drop("ccode")
-    elif index.pq is not None:
-        cand = cand.withColumn(
-            "cvec", make_pq_decode_udf(index.pq)(F.col("ccode"))
-        ).drop("ccode")
-    # in-memory index: the join key _c is a UDF expression, and the
-    # plain == key makes Catalyst infer isnotnull(_c) — an inlined
-    # constraint that gets extracted as a SECOND ArrowEvalPython over
-    # the whole candidate table (assignment would run 2×). eqNullSafe
-    # infers no constraint (still a hash-join key; _c is never null).
-    # Stored index: _c is a parquet PARTITION column — plain equality
-    # keeps the probe eligible for dynamic partition pruning.
-    if index.path is not None:
-        cond = cand["_c"] == qry["_probe"]
-    else:
-        cond = cand["_c"].eqNullSafe(qry["_probe"])
-    paired = cand.join(qry, cond).filter(
-        F.col("cand_id") != F.col("query_id")
+    qry = queries.select("query_id", F.col(vec_col).alias("qvec"))
+    qids, Q = _collect_query_matrix(qry, "qvec")
+    C = np.asarray(index.centroids, dtype=np.float64)
+    cn = (C * C).sum(axis=1)
+    lists = (
+        np.argsort(cn[None, :] - 2.0 * (Q @ C.T), axis=1, kind="stable")[
+            :, :nprobe
+        ]
+        if len(Q)
+        else []
     )
-    return _rank_tail(
-        paired, queries, vec_col, k, round_to,
-        quantized=index.quantized,
-        rerank_from=rerank_from, rerank_id_col=rerank_id_col,
-        rerank_factor=rerank_factor,
+    return _probe_topk(
+        index, lists, len(index.centroids), qry, (qids, Q), k, round_to,
+        rerank_from, rerank_id_col, vec_col, rerank_factor,
     )
 
 
-def _rank_tail(
-    paired: DataFrame,
-    queries: DataFrame,
-    vec_col: str,
+def _probe_topk(
+    index,
+    lists,
+    n_lists: int,
+    qry: DataFrame,
+    q_collected,
     k: int,
     round_to: int,
-    quantized: bool,
     rerank_from: DataFrame | None,
     rerank_id_col: str,
+    vec_col: str,
     rerank_factor: int,
 ) -> DataFrame:
-    """Shared score/rank tail of every IVF probe (flat and tree):
-    cosine over the (possibly reconstructed) candidate vectors, then —
-    for a quantized index with ``rerank_from`` — the FAISS refine step:
-    keep k·factor survivors per query on the approximate score and
-    re-rank ONLY them against full precision (the survivor set is
-    n_queries × k·factor rows and broadcasts into the id join)."""
-    sim = _dot(F.col("cvec"), F.col("qvec")) / (
-        _norm(F.col("cvec")) * _norm(F.col("qvec"))
-    )
+    """Shared scoring of every IVF probe (flat and tree) through the
+    top-k kernel. ``lists`` holds each query's probed list ids, in
+    ``q_collected`` order. A quantized payload is decoded to ``cvec``
+    and scored like a float one. With ``rerank_from`` the refine step
+    follows: the k·rerank_factor best per query by the raw
+    reconstruction score (unrounded — rounding would merge near-ties
+    the exact pass must separate) are collected driver-side (n_queries
+    × k·factor rows), and the same kernel re-scores only those
+    survivors at full precision."""
+    import numpy as np
+
     from .topk import per_key_topk
 
-    if quantized and rerank_from is not None:
-        # approximate pass keeps k·factor survivors per query at full
-        # float precision (rounding here would merge near-ties the
-        # exact pass must separate)
-        surv = per_key_topk(
-            paired.select("query_id", "cand_id", sim.alias("_approx")),
-            ["query_id"],
-            [F.desc("_approx"), F.asc("cand_id")],
-            k=k * rerank_factor,
-        ).select("query_id", "cand_id")
-        exact = (
-            rerank_from.select(
-                F.col(rerank_id_col).alias("cand_id"),
-                F.col(vec_col).alias("_fvec"),
-            )
-            .join(F.broadcast(surv), ["cand_id"])
-            .join(
-                F.broadcast(
-                    queries.select("query_id", F.col(vec_col).alias("qvec"))
-                ),
-                ["query_id"],
-            )
-        )
-        esim = _dot(F.col("_fvec"), F.col("qvec")) / (
-            _norm(F.col("_fvec")) * _norm(F.col("qvec"))
-        )
-        scored = exact.select(
-            "query_id", "cand_id", F.round(esim, round_to).alias("cosine")
-        )
-        return per_key_topk(
-            scored, ["query_id"], [F.desc("cosine"), F.asc("cand_id")], k=k
-        ).select("query_id", "cand_id", "cosine", "rnk")
+    qids, _ = q_collected
+    probe_bool = np.zeros((len(qids), max(n_lists, 1)), dtype=bool)
+    for j, row in enumerate(lists):
+        probe_bool[j, row] = True
+    cand = index.assigned
+    probed = sorted({int(c) for row in lists for c in row})
+    if index.path is not None and len(probed) < n_lists:
+        cand = cand.filter(F.col("_c").isin(probed))
+    pq = getattr(index, "pq", None)
+    if index.sq8 is not None:
+        cand = cand.withColumn("cvec", sq8_decode_col(F.col("ccode"), index.sq8))
+    elif pq is not None:
+        cand = cand.withColumn("cvec", make_pq_decode_udf(pq)(F.col("ccode")))
+    refine = rerank_from is not None and (index.sq8 is not None or pq is not None)
+    n_keep = k * rerank_factor if refine else k
 
-    scored = paired.select(
-        "query_id", "cand_id", F.round(sim, round_to).alias("cosine")
+    def in_probed_list(pdf, C):
+        return probe_bool[:, pdf["_c"].to_numpy()].T
+
+    superset = _kernel_topk_superset(
+        cand, qry, n_keep, round_to, extra_cols=("_c",),
+        mask_fn=in_probed_list, q_collected=q_collected,
     )
-    return per_key_topk(
-        scored, ["query_id"], [F.desc("cosine"), F.asc("cand_id")], k=k
-    ).select("query_id", "cand_id", "cosine", "rnk")
+    if not refine:
+        return _topk_tail(superset, k, round_to)
+    survivors = per_key_topk(
+        superset, ["query_id"], [F.desc("cosine"), F.asc("cand_id")],
+        k=n_keep,
+    ).select("query_id", "cand_id").collect()
+    qpos = {q: j for j, q in enumerate(qids)}
+    keep: dict = {}
+    for r in survivors:
+        keep.setdefault(r["cand_id"], []).append(qpos[r["query_id"]])
+
+    def is_survivor(pdf, C):
+        m = np.zeros((len(pdf), len(qids)), dtype=bool)
+        for i, c in enumerate(pdf["cand_id"]):
+            m[i, keep.get(c, [])] = True
+        return m
+
+    full = rerank_from.select(
+        F.col(rerank_id_col).alias("cand_id"), F.col(vec_col).alias("cvec")
+    ).filter(F.col("cand_id").isin(list(keep)))
+    superset = _kernel_topk_superset(
+        full, qry, k, round_to, mask_fn=is_survivor, q_collected=q_collected
+    )
+    return _topk_tail(superset, k, round_to)
 
 
 def ivf_topk(
@@ -1203,7 +1258,7 @@ class IVF2Index:
     sub-centroids (driver-side) and the assigned candidate table
     (cand_id, cvec, _c) where ``_c = cell * n_sub + sub`` — the same
     single-column list id the flat index uses, so the stored layout
-    (parquet partitioned by _c) and the probe join are identical."""
+    (parquet partitioned by _c) and the probe scoring are identical."""
 
     def __init__(
         self,
@@ -1328,38 +1383,13 @@ def load_ivf2_index(spark, path: str) -> IVF2Index:
     )
 
 
-def make_tree_probe_udf(
-    coarse: list[list[float]],
-    subs: dict[int, list[list[float]]],
-    n_sub: int,
-    wprobe: int,
-    nprobe: int,
-):
-    """Factory: pandas UDF mapping a query vector to the ``array<int>``
-    of list ids to probe — the wprobe nearest coarse cells are opened,
-    all their sub-centroids scored, and the nprobe globally nearest
-    lists returned (ties by list id: deterministic). Per query this is
-    n_coarse + wprobe·n_sub distances, the tree's whole point."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    @pandas_udf(ArrayType(IntegerType()))
-    def probe(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype=object)
-        M = np.stack([np.asarray(x, dtype=np.float64) for x in v])
-        return pd.Series(
-            _tree_probe_rows(M, coarse, subs, n_sub, wprobe, nprobe)
-        )
-
-    return probe
-
-
 def _tree_probe_rows(M, coarse, subs, n_sub, wprobe, nprobe):
-    """Probe-list derivation shared by the tree-probe UDF and the
-    driver-side kernel path — one list of probed list ids per row of
-    the float64 query matrix ``M`` (same expressions either way)."""
+    """Driver-side probe-list derivation of the two-level index: per row
+    of the float64 query matrix ``M``, the wprobe nearest coarse cells
+    are opened, all their sub-centroids scored, and the nprobe globally
+    nearest list ids returned (ties by list id: deterministic). Per
+    query this is n_coarse + wprobe·n_sub distances, the tree's whole
+    point."""
     import numpy as np
 
     C = np.asarray(coarse, dtype=np.float64)
@@ -1395,70 +1425,21 @@ def ivf2_probe(
     rerank_id_col: str = "vec_id",
     rerank_factor: int = 4,
 ) -> DataFrame:
-    """Probe a two-level index — identical join/score/rank tail to
-    ivf_probe (the list id column is the same shape), only the probe
-    list derivation goes through the tree. With wprobe == n_coarse and
-    nprobe ≥ total lists the result EQUALS brute force (each candidate
-    lives in exactly one list), which is the oracle configuration.
-    Against a quantized tree (``index.sq8``), pass ``rerank_from`` for
-    the exact FAISS refine step (see _rank_tail).
-
-    Float probes run the Arrow scoring kernel (r7, same contract as
-    ivf_probe): tree probe lists derived driver-side via the shared
-    _tree_probe_rows, stored indexes pre-filtered on the ``_c``
-    partition column, per-batch top-k supersets instead of the pair
-    join + full window shuffle."""
-    if index.sq8 is None:
-        import numpy as np
-
-        qry = queries.select("query_id", F.col(vec_col).alias("qvec"))
-        qids, Q = _collect_query_matrix(qry, "qvec")
-        lists = _tree_probe_rows(
-            Q, index.coarse, index.subs, index.n_sub, wprobe, nprobe
-        ) if len(Q) else []
-        n_lists = len(index.coarse) * index.n_sub
-        probe_bool = np.zeros((len(lists), max(n_lists, 1)), dtype=bool)
-        for j, row in enumerate(lists):
-            probe_bool[j, row] = True
-        cand = index.assigned
-        probed = sorted({int(c) for row in lists for c in row})
-        if index.path is not None and len(probed) < n_lists:
-            cand = cand.filter(F.col("_c").isin(probed))
-
-        def mask_fn(pdf, cid, nq):
-            return probe_bool[:, pdf["_c"].to_numpy()].T
-
-        superset = _kernel_topk_superset(
-            cand, qry, k, round_to, vec_col="qvec",
-            extra_cols=("_c",), mask_fn=mask_fn, q_collected=(qids, Q),
-        )
-        return _topk_tail(superset, k, round_to)
-
-    probe = make_tree_probe_udf(
-        index.coarse, index.subs, index.n_sub, wprobe, nprobe
-    )
-    qry = queries.select(
-        "query_id", F.col(vec_col).alias("qvec")
-    ).withColumn("_probe", F.explode(probe(F.col("qvec"))))
-    cand = index.assigned
-    if index.sq8 is not None:
-        cand = cand.withColumn(
-            "cvec", sq8_decode_col(F.col("ccode"), index.sq8)
-        ).drop("ccode")
-    # same constraint nuance as ivf_probe: eqNullSafe for the in-memory
-    # index (plain == would re-run the assignment UDF as an extracted
-    # isnotnull constraint); plain equality for the stored index so the
-    # probe stays eligible for dynamic partition pruning
-    if index.path is not None:
-        cond = cand["_c"] == qry["_probe"]
-    else:
-        cond = cand["_c"].eqNullSafe(qry["_probe"])
-    paired = cand.join(qry, cond).filter(F.col("cand_id") != F.col("query_id"))
-    return _rank_tail(
-        paired, queries, vec_col, k, round_to,
-        quantized=index.sq8 is not None,
-        rerank_from=rerank_from, rerank_id_col=rerank_id_col,
-        rerank_factor=rerank_factor,
+    """Probe a two-level index — the same _probe_topk scoring as
+    ivf_probe (the list id column has the same shape); only the probe
+    list derivation goes through the tree (_tree_probe_rows). With
+    wprobe == n_coarse and nprobe ≥ total lists the result EQUALS brute
+    force (each candidate lives in exactly one list), which is the
+    oracle configuration. Against a quantized tree (``index.sq8``),
+    pass ``rerank_from`` for the exact refine step."""
+    qry = queries.select("query_id", F.col(vec_col).alias("qvec"))
+    qids, Q = _collect_query_matrix(qry, "qvec")
+    lists = _tree_probe_rows(
+        Q, index.coarse, index.subs, index.n_sub, wprobe, nprobe
+    ) if len(Q) else []
+    return _probe_topk(
+        index, lists, len(index.coarse) * index.n_sub, qry, (qids, Q), k,
+        round_to, rerank_from, rerank_id_col, vec_col, rerank_factor,
     )
 
 
@@ -1605,12 +1586,9 @@ def lsh_topk(
     qids, Q = _collect_query_matrix(qry, "qvec")
     qsig = _pack_signatures(Q, W, n_planes, n_tables) if len(Q) else None
 
-    def mask_fn(pdf, cid, nq):
-        C = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in pdf["cvec"]]
-        )
+    def mask_fn(pdf, C):
         csig = _pack_signatures(C, W, n_planes, n_tables)
-        m = np.zeros((len(cid), nq), dtype=bool)
+        m = np.zeros((len(pdf), len(qids)), dtype=bool)
         for t in range(n_tables):
             m |= csig[:, t][:, None] == qsig[:, t][None, :]
         return m

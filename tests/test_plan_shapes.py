@@ -92,39 +92,55 @@ def test_fanout_single_arrow_eval(spark):
 
 
 def test_ivf_probe_is_kernel_scored_no_pair_join(spark):
-    """The r7 float IVF probe: candidates are scored inside ONE
-    mapInPandas kernel (per-batch top-k supersets), so the plan has NO
-    pair join at all — no HashJoin carrying vector payloads, no
+    """The IVF probe, float or quantized: candidates are scored inside
+    ONE mapInPandas kernel (per-batch top-k supersets), so the plan has
+    NO pair join at all — no HashJoin carrying vector payloads, no
     nested-loop, no row-at-a-time Python. The only other Python node is
     the Arrow-batched centroid-assignment UDF on the candidate side
     (exactly one — the kernel reads `_c` without a join, so the old
-    eqNullSafe double-eval hazard is structurally gone)."""
+    eqNullSafe double-eval hazard is structurally gone). A quantized
+    probe with a rerank collects its survivors first; its plan is the
+    rerank kernel over the full-precision table alone."""
     import re
 
     from pyspark.sql import functions as F
 
-    from downloader_spark.operators.similarity import ivf_topk
+    from downloader_spark.operators.similarity import (
+        build_ivf_index,
+        ivf_probe,
+        ivf_topk,
+    )
 
     emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
     qry = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    plan = explain_str(ivf_topk(emb, qry, k=3, n_centroids=4, nprobe=2, iters=1))
-    assert "Join" not in plan  # the pair join is gone entirely
-    assert "BatchEvalPython" not in plan
-    assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1
-    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1
+    sq8 = build_ivf_index(emb, n_centroids=4, iters=1, persist=False, quantize="sq8")
+    for df, n_assign in (
+        (ivf_topk(emb, qry, k=3, n_centroids=4, nprobe=2, iters=1), 1),
+        (ivf_probe(sq8, qry, k=3, nprobe=2), 1),
+        (ivf_probe(sq8, qry, k=3, nprobe=2, rerank_from=emb), 0),
+    ):
+        plan = explain_str(df)
+        assert "Join" not in plan  # the pair join is gone entirely
+        assert "BatchEvalPython" not in plan
+        assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1
+        assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == n_assign
 
 
 def test_exact_near_dup_guard_means_lsh_default_no_nested_loop(spark):
-    """The DEFAULT embedding_near_dups path must be the LSH bucket join
-    — a nested-loop only appears in the opt-in exact verify path."""
+    """embedding_near_dups scores pairs in the grouped pair kernel on
+    both paths — the DEFAULT LSH path groups by signature bucket, the
+    opt-in exact path is one group — so neither plan has a nested loop
+    or any join."""
     from downloader_spark.operators.similarity import embedding_near_dups
 
     emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
-    plan = explain_str(embedding_near_dups(emb, threshold=0.9, n_planes=8))
-    assert "NestedLoop" not in plan
-    assert "Join" in plan  # sig-bucket equi-join present
+    for kw in ({"n_planes": 8}, {"exact": True}):
+        plan = explain_str(embedding_near_dups(emb, threshold=0.9, **kw))
+        assert "NestedLoop" not in plan, kw
+        assert "Join" not in plan, kw
+        assert "FlatMapGroupsInPandas" in plan, kw
 
 
 def test_bucketed_pages_join_skips_pages_side_shuffle(spark):
@@ -192,14 +208,14 @@ def test_stored_ivf_index_probe_prunes_partitions(spark, tmp_path):
 
     m = re.search(r"PartitionFilters: \[([^\]]*_c[^\]]*)\]", plan)
     assert m, plan  # the _c IN (...) filter reached the partitioned scan
-    # and the quantized probe (old join path) keeps its dynamic pruning
-    # eligibility: the sq8 probe still joins on the partition column
+    # the quantized probe shares the float path, so it prunes the same
+    # static way
     sq8 = build_ivf_index(
         emb, n_centroids=16, iters=1, path=str(tmp_path / "ivf_sq8"),
         quantize="sq8",
     )
-    plan_q = explain_str(ivf_probe(sq8, qry, k=3, nprobe=2, rerank_from=emb))
-    assert "dynamicpruning" in plan_q.lower()
+    plan_q = explain_str(ivf_probe(sq8, qry, k=3, nprobe=2))
+    assert re.search(r"PartitionFilters: \[([^\]]*_c[^\]]*)\]", plan_q), plan_q
 
 
 def test_round4_text_operators_stay_native(spark):

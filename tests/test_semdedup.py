@@ -61,7 +61,10 @@ def test_assignment_parity_spark_vs_python(spark):
     got = {
         r["vec_id"]: r["cl"]
         for r in emb.select(
-            "vec_id", nearest(micro_col(F.col("embedding"))).alias("cl")
+            "vec_id",
+            nearest(micro_col(F.col("embedding")), F.col("embedding"))[
+                "cluster"
+            ].alias("cl"),
         ).collect()
     }
     rows = emb.select("vec_id", "embedding").collect()
@@ -110,6 +113,32 @@ def test_semantic_dedup_drops_clones_keeps_outlier(spark):
         comps.setdefault(r["component"], 0)
         comps[r["component"]] += int(r["keep"])
     assert all(v == 1 for v in comps.values())
+
+
+def test_semantic_dedup_zero_vectors_are_singletons(spark):
+    """Zero-norm vectors have no finite pair cosine, so they form no
+    edge: each is its own kept component with a null cos_centroid, and
+    every other row is decided exactly as without them."""
+    rows = [(i, [1.0, 0.001 * i, 0.0, 0.0]) for i in range(3)]
+    rows += [(10, [0.0, 1.0, 0.0, 0.0])]
+    zeros = [(20, [0.0] * 4), (21, [0.0] * 4)]
+    cents = quantize_centroids([[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]])
+    schema = "vec_id long, embedding array<double>"
+
+    def run(data):
+        df = spark.createDataFrame(data, schema)
+        return {
+            r["vec_id"]: r.asDict()
+            for r in semantic_dedup(spark, df, cents, threshold=0.99).collect()
+        }
+
+    plain, mixed = run(rows), run(rows + zeros)
+    for i in (20, 21):
+        z = mixed.pop(i)
+        assert z["component"] == i and z["keep"]
+        assert z["cos_centroid"] is None
+    assert mixed == plain
+    assert {plain[i]["component"] for i in (0, 1, 2)} == {0}
 
 
 def test_semantic_dedup_seeded_corpus_recall(spark):

@@ -180,6 +180,41 @@ def test_load_ivf_index_roundtrip(spark, emb, tmp_path):
         assert a == b
 
 
+def test_quantized_probes_exhaustive_rerank_equal_exact(spark, emb):
+    """Every list probed and rerank_factor·k >= the row count: every
+    candidate survives the reconstruction-scored pass, so the
+    full-precision rerank must EQUAL brute force — ids, ranks and
+    cosine bits — on SQ8 IVF, PQ IVF and SQ8 IVF2."""
+    from downloader_spark.operators.similarity import (
+        build_ivf2_index,
+        ivf2_probe,
+    )
+
+    qry = emb.filter(F.col("vec_id") % 25 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    k = 5
+    factor = -(-emb.count() // k)
+    want = sorted(map(tuple, cosine_topk(emb, qry, k=k).collect()))
+    sq8 = build_ivf_index(emb, n_centroids=4, iters=1, persist=False, quantize="sq8")
+    pq = build_ivf_index(
+        emb, n_centroids=4, iters=1, persist=False, quantize="pq",
+        pq_m=16, pq_ks=16,
+    )
+    tree = build_ivf2_index(
+        emb, n_coarse=2, n_sub=2, iters=1, persist=False, quantize="sq8"
+    )
+    for name, got in (
+        ("sq8", ivf_probe(sq8, qry, k=k, nprobe=4, rerank_from=emb,
+                          rerank_factor=factor)),
+        ("pq", ivf_probe(pq, qry, k=k, nprobe=4, rerank_from=emb,
+                         rerank_factor=factor)),
+        ("ivf2_sq8", ivf2_probe(tree, qry, k=k, wprobe=2, nprobe=4,
+                                rerank_from=emb, rerank_factor=factor)),
+    ):
+        assert sorted(map(tuple, got.collect())) == want, name
+
+
 # ---------------------------------------------------------------------------
 # SQ8 on the TWO-LEVEL index (round-6): same codebook, tree layout
 # ---------------------------------------------------------------------------

@@ -118,7 +118,8 @@ def test_embedding_near_dups_default_is_lsh_and_exact_is_guarded(spark, vecs):
     exact_pairs = {(r["id_a"], r["id_b"]) for r in exact.collect()}
     assert lsh_pairs <= exact_pairs  # LSH can only miss, never invent
 
-    # exact plan is a nested loop — must refuse above the size guard
+    # exact scores every pair (one kernel group) — must refuse above
+    # the size guard
     old = similarity.MAX_EXACT_ROWS
     similarity.MAX_EXACT_ROWS = 2
     try:
@@ -628,3 +629,53 @@ def test_kernel_paths_handle_empty_query_batch(spark, vecs):
     assert ivf_probe(idx, empty_q, k=3, nprobe=2).count() == 0
     idx2 = build_ivf2_index(df, n_coarse=2, n_sub=2, iters=1, persist=False)
     assert ivf2_probe(idx2, empty_q, k=3, wprobe=2, nprobe=2).count() == 0
+
+
+def test_zero_norm_vectors_are_inadmissible(spark, vecs):
+    """A zero vector's cosine is 0/0: it is never a top-k candidate,
+    never a near-dup pair, and never the k-th value of a kernel batch
+    — so a batch holding >= k zero vectors keeps its finite candidates
+    and the results equal those of the input without the zeros."""
+    from downloader_spark.operators.similarity import embedding_near_dups
+
+    df, _ = vecs
+    k = 3
+    # k per kernel partition: by pigeonhole >= k zeros share one batch
+    n_zero = k * spark.sparkContext.defaultParallelism
+    zeros = spark.createDataFrame(
+        [(1000 + i, [0.0] * 8) for i in range(n_zero)],
+        "vec_id long, embedding array<float>",
+    )
+    with_zeros = df.unionByName(zeros)
+    qry = with_zeros.filter(
+        (F.col("vec_id") % 7 == 0) | (F.col("vec_id") == 1000)
+    ).select(F.col("vec_id").alias("query_id"), "embedding")
+    got = sorted(map(tuple, cosine_topk(with_zeros, qry, k=k).collect()))
+    assert got == sorted(map(tuple, cosine_topk(df, qry, k=k).collect()))
+    assert got and all(r[0] < 1000 and r[1] < 1000 for r in got)
+    for kw in ({"exact": True}, {"n_planes": 4, "n_tables": 2}):
+        want = sorted(map(tuple, embedding_near_dups(df, threshold=0.9, **kw).collect()))
+        assert want
+        assert sorted(map(tuple, embedding_near_dups(
+            with_zeros, threshold=0.9, **kw
+        ).collect())) == want, kw
+
+
+def test_near_dups_string_ids(vecs):
+    """String ids through the pair kernel: the exact and LSH paths
+    return the long-id pairs, renamed. Most (group, block-pair) tasks
+    yield no pair, and their empty frames must carry the string id
+    type."""
+    from downloader_spark.operators.similarity import embedding_near_dups
+
+    df, _ = vecs
+    sdf = df.select(
+        F.format_string("v%03d", "vec_id").alias("vec_id"), "embedding"
+    )
+    for kw in ({"exact": True}, {"n_planes": 8}):
+        want = {
+            (f"v{a:03d}", f"v{b:03d}", c)
+            for a, b, c in embedding_near_dups(df, threshold=0.9, **kw).collect()
+        }
+        got = set(map(tuple, embedding_near_dups(sdf, threshold=0.9, **kw).collect()))
+        assert want and got == want, kw
